@@ -31,9 +31,7 @@ object GraftSession {
     * read per-query, so runtime-settable) applied best-effort. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // GRAFT_AQE=off: dev attribution knob (r22 fast-tail experiment)
-    spark.conf.set("spark.sql.adaptive.enabled",
-      (!sys.env.get("GRAFT_AQE").contains("off")).toString)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }

@@ -77,7 +77,7 @@ object AnnIndex {
 
   /** Train (or take pre-trained artifacts) and write the full index.
     * Passing `cents`/`books` trained elsewhere (e.g. the session
-    * memo stores) keeps one Lloyd run per corpus; omitting them
+    * SessionStore) keeps one Lloyd run per corpus; omitting them
     * trains here with the standard deterministic trainer. */
   def write(df: DataFrame, idCol: String, vecCol: String,
             dir: String, table: String,
@@ -141,18 +141,17 @@ object AnnIndex {
     // release path: Dataset.unpersist on a localCheckpoint'd frame is
     // a NO-OP (it only uncaches the CacheManager entry, which a
     // checkpoint never had — the blocks live on an internal RDD), so
-    // capture the checkpoint's backing RDD at creation and unpersist
+    // read the checkpoint's backing RDD off its plan and unpersist
     // THAT once the count is paid; otherwise a large delta's blocks
     // linger in executor storage until ContextCleaner GC
-    val (coded, ckptRdds) =
-      if (tuningExists)
-        Dedup.withNewPersistentRdds(coded0.localCheckpoint(eager = true))
-      else (coded0, Nil)
+    val coded =
+      if (tuningExists) coded0.localCheckpoint(eager = true) else coded0
     writeCodes(coded, dir, table, meta.idCol, meta.numBuckets,
       SaveMode.Append)
     if (tuningExists) {
       ageTuning(spark, dir, coded.count())
-      ckptRdds.foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(coded)
+        .foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -634,7 +633,7 @@ object AnnIndex {
       metaCols)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[operators] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
     if (f.exists()) { f.delete(); () }
   }

@@ -16,104 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Session-scoped store for expensive derived frames (minhash
-    * signatures, LSH candidate pairs). A production 100-TB pipeline
-    * materializes signatures ONCE as a table and feeds every
-    * downstream near-dup job from it; within one engine session this
-    * memo gives the same compute-once semantics across the
-    * LSH/estimate/cluster queries (each frame is eagerly
-    * materialized before storing, so lookups never recompute).
-    * Callers opt in by passing a `cacheKey`; `clearStore()` releases
-    * everything. */
-  private val store = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  private[operators] def memoized(key: String)(build: => DataFrame): DataFrame =
-    store.getOrElseUpdate(key, trackOwned(build))
-
-  /** Persistent-RDD ids created by store builds — the only blocks
-    * [[clearStore]] may release. Builds claim their blocks through
-    * [[trackOwned]]; a caller-held localCheckpoint created OUTSIDE a
-    * store build keeps its blocks across clearStore (the r17 global
-    * sweep broke such frames permanently: a checkpoint-truncated
-    * lineage cannot recompute, so the next action failed with
-    * "checkpoint block not found"). */
-  private val ownedRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Run `build` and CLAIM any persistent RDDs it creates (cache or
-    * localCheckpoint blocks) for [[clearStore]] release. The claim is
-    * a diff of `SparkContext.getPersistentRDDs` around the build:
-    * intermediates the build itself releases are gone before the
-    * diff, and nested builds (e.g. Classifier.fit's per-epoch
-    * checkpoints) are claimed with their parent. Dataset.unpersist is
-    * NOT the release path for checkpoint blocks — on a
-    * localCheckpoint'd frame it only calls CacheManager.uncacheQuery,
-    * which never saw the checkpoint's internal RDD — so RDD-id
-    * claiming here is what makes release possible at all. Caveat: a
-    * checkpoint created CONCURRENTLY on another thread during a build
-    * can be over-claimed (r21+: pqCodebooks runs memoized subspace
-    * trainings in parallel). Over-claiming is harmless for those:
-    * every concurrent training's sample checkpoint is SCOPED — it
-    * self-releases via the precise ColumnBridge.checkpointRdds handle
-    * before its build returns — so by the time clearStore can run,
-    * the over-claimed id is already unpersisted and the release
-    * lookup is a no-op (ids are monotonic, never recycled). A
-    * LONG-LIVED frame checkpointed concurrently outside a store build
-    * would degrade to the pre-r18 sweep behavior for that one frame;
-    * no engine entry point does that today. */
-  def trackOwned[T](build: => T): T = {
-    val (out, fresh) = withNewPersistentRdds(build)
-    fresh.foreach(r => ownedRddIds.add(r.id))
-    out
-  }
-
-  /** Run `build`, returning its result plus the persistent RDDs it
-    * registered (the only handle that can release localCheckpoint
-    * blocks — see [[trackOwned]]). For scoped lifetimes (e.g.
-    * AnnIndex.append's coded-delta checkpoint) unpersist the returned
-    * RDDs directly instead of claiming them for clearStore. */
-  def withNewPersistentRdds[T](build: => T): (T, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext)
-    val before: Set[Int] =
-      sc.map(_.getPersistentRDDs.keySet.toSet).getOrElse(Set.empty)
-    val out = build
-    val fresh = sc.toSeq.flatMap(_.getPersistentRDDs.valuesIterator
-      .filter(r => !before.contains(r.id)))
-    (out, fresh)
-  }
-
-  /** Extra session-keyed caches outside this object (e.g. the oracle
-    * centroid stash in the query layer) register here so ONE call
-    * releases every store — no cache survives a store clear. */
-  private val clearHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-
-  def onClearStore(hook: Runnable): Unit = clearHooks.add(hook)
-
-  def clearStore(): Unit = {
-    store.clear()
-    Similarity.clearCentroidMemo()
-    clearHooks.forEach(_.run())
-    // Release the store-owned checkpoint/cache BLOCKS too: clearing
-    // the maps only drops the references, and localCheckpoint blocks
-    // then linger in executor storage until ContextCleaner GC — which
-    // under a large heap may be minutes away. The r17 OverlapProbe
-    // measured the SECOND cold signature-store build in one JVM at
-    // 1.75× the first (71 → 125 s at 100×) from exactly this eviction
-    // pressure. Scope (r18, was a global getPersistentRDDs sweep):
-    // only RDDs CLAIMED by store builds via [[trackOwned]] are
-    // released — a caller-held localCheckpoint'd frame outside the
-    // store keeps its blocks (its lineage is truncated, so a swept
-    // block is unrecoverable, not merely evicted), and unrelated
-    // application caches sharing the context survive.
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-      val live = s.sparkContext.getPersistentRDDs
-      ownedRddIds.forEach { id =>
-        live.get(id).foreach(_.unpersist(blocking = false)); ()
-      }
-    }
-    ownedRddIds.clear()
-  }
+  /** Releases every session-trained artifact — the signature, pair
+    * and overlap frames below, the Similarity trainings and the
+    * query layer's fits and index dirs — through [[SessionStore.clear]].
+    * Callers opt into the store by passing a `cacheKey`. */
+  def clearStore(): Unit = SessionStore.clear()
 
   /** Exact dedup, keep-first: one surviving row per key group with
     * group stats (keeper id, duplicate count, earliest ts). */
@@ -228,14 +135,12 @@ object Dedup {
                              k: Int, cacheKey: Option[String]): DataFrame = {
     def build = shingles(df, idCol, textCol, k)
       .select(col(idCol), shingleHash(col("shingle")).as("sh"))
-    cacheKey match {
-      // idCol/textCol belong in the memo key: two callers sharing a
-      // cacheKey but shingling different columns must not silently
-      // reuse each other's materialized frame
-      case Some(ck) => memoized(s"$ck|sh|$k|$idCol|$textCol")(
-        build.localCheckpoint(eager = true))
-      case None => build
-    }
+    // idCol/textCol belong in the memo name: two callers sharing a
+    // cacheKey but shingling different columns must not silently
+    // reuse each other's materialized frame
+    if (cacheKey.isEmpty) build
+    else SessionStore.memo(df.sparkSession, cacheKey, s"sh|$k|$idCol|$textCol")(
+      build.localCheckpoint(eager = true))
   }
 
   /** Wide MinHash signatures: one row per doc, one column per
@@ -357,13 +262,11 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, numPerms: Int,
                         cacheKey: Option[String]): DataFrame =
-    cacheKey match {
-      case Some(k) => memoized(s"$k|mh|$shingleK|$numPerms")(
-        minhashFromHashed(hashedShingles(df, idCol, textCol, shingleK, cacheKey),
-          idCol, numPerms).localCheckpoint(eager = true))
-      case None => minhashFromHashed(
-        hashedShingles(df, idCol, textCol, shingleK, None), idCol, numPerms)
-    }
+    if (cacheKey.isEmpty) minhashFromHashed(
+      hashedShingles(df, idCol, textCol, shingleK, None), idCol, numPerms)
+    else SessionStore.memo(df.sparkSession, cacheKey, s"mh|$shingleK|$numPerms")(
+      minhashFromHashed(hashedShingles(df, idCol, textCol, shingleK, cacheKey),
+        idCol, numPerms).localCheckpoint(eager = true))
 
   /** Full MinHash-LSH near-dup pipeline. With a `cacheKey`, the
     * signature AND pair frames come from the session store — the
@@ -375,10 +278,8 @@ object Dedup {
     def build = candidatePairs(lshBands(
       minhashSignatures(df, idCol, textCol, shingleK, numPerms, cacheKey),
       idCol, numPerms, rowsPerBand), idCol)
-    cacheKey match {
-      case Some(k) => memoized(s"$k|pairs|$shingleK|$numPerms|$rowsPerBand")(build)
-      case None => build
-    }
+    SessionStore.memo(df.sparkSession, cacheKey,
+      s"pairs|$shingleK|$numPerms|$rowsPerBand")(build)
   }
 
   /** Connected components over near-dup pairs → cluster ids, so a
@@ -597,11 +498,9 @@ object Dedup {
       .join(sizes.select(col(idCol).as("id1"), col("set_size").as("size1")), "id1")
       .join(sizes.select(col(idCol).as("id2"), col("set_size").as("size2")), "id2")
     }
-    cacheKey match {
-      case Some(ck) => memoized(s"$ck|ovl|$k|$maxDocFreq")(
-        build.localCheckpoint(eager = true))
-      case None => build
-    }
+    if (cacheKey.isEmpty) build
+    else SessionStore.memo(df.sparkSession, cacheKey, s"ovl|$k|$maxDocFreq")(
+      build.localCheckpoint(eager = true))
   }
 
   /** n-gram Jaccard similarity for pairs sharing at least one shingle.

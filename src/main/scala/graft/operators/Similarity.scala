@@ -151,43 +151,33 @@ object Similarity {
       .select(col(idCol),
         cellAssignOn(col("_v"), cents, replayExact = true)
           .cast("long").as("cell"))
-    cacheKey match {
-      // trained cell assignments go through the session store like the
-      // minhash signatures — one training run per (session, corpus)
-      case Some(ck) => Dedup.memoized(s"$ck|kmeans|$k|$iters|$trainMod")(
-        assign.localCheckpoint(eager = true))
-      case None => assign
-    }
+    // trained cell assignments go through the session store like the
+    // minhash signatures — one training run per (session, corpus)
+    if (cacheKey.isEmpty) assign
+    else SessionStore.memo(df.sparkSession, cacheKey, s"kmeans|$k|$iters|$trainMod")(
+      assign.localCheckpoint(eager = true))
   }
 
-  /** Driver-side memo for trained centroid sets (k·dim doubles —
-    * kilobytes): the oracle interpolation must reuse the EXACT floats
-    * the assignment used, and a re-train per consumer would double
-    * the Lloyd jobs. */
-  private val centroidMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-
-  /** Evicted together with the Dedup session store ([[Dedup.clearStore]])
-    * — the memo holds kilobytes per (session, corpus), but a long-lived
-    * JVM cycling sessions should not accumulate them. */
-  private[operators] def clearCentroidMemo(): Unit = centroidMemo.clear()
-
-  /** Train (or fetch the memoized) Lloyd centroids — exposed so
-    * callers can interpolate the exact trained values into an engine-
-    * independent replay (the DuckDB oracle), same discipline as
-    * [[hyperplanes]]. */
+  /** Train (or fetch from the [[SessionStore]]) Lloyd centroids —
+    * exposed so callers can interpolate the exact trained values into
+    * an engine-independent replay (the DuckDB oracle), same discipline
+    * as [[hyperplanes]]; the store keeps the EXACT floats the
+    * assignment used, and a re-train per consumer would double the
+    * Lloyd jobs. */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
                       k: Int = 16, iters: Int = 5, trainMod: Int = 5,
                       cacheKey: Option[String] = None): Array[Array[Double]] =
-    cacheKey match {
-      // trackOwned: belt-and-braces claim for clearStore of any block
-      // a future trainer leaves behind (today trainCentroids releases
-      // its own sample checkpoint before returning)
-      case Some(ck) => centroidMemo.getOrElseUpdate(
-        s"$ck|kmeansC|$k|$iters|$trainMod",
-        Dedup.trackOwned(trainCentroids(df, idCol, vecCol, k, iters, trainMod)))
-      case None => trainCentroids(df, idCol, vecCol, k, iters, trainMod)
-    }
+    SessionStore.memo(df.sparkSession, cacheKey, centroidsName(k, iters, trainMod))(
+      trainCentroids(df, idCol, vecCol, k, iters, trainMod))
+
+  /** [[SessionStore]] names of the trainings above and the PQ
+    * codebooks below, for readers of [[SessionStore.trained]]. */
+  def centroidsName(k: Int, iters: Int, trainMod: Int): String =
+    s"kmeansC|$k|$iters|$trainMod"
+  def pqBooksName(m: Int, ks: Int, iters: Int, trainMod: Int): String =
+    s"pq|$m|$ks|$iters|$trainMod"
+  def pqResidualBooksName(m: Int, ks: Int, iters: Int, trainMod: Int): String =
+    s"pqres|$m|$ks|$iters|$trainMod"
 
   /** Squared-L2 argmin over centroid literals: ‖c‖² − 2⟨x,c⟩ (‖x‖²
     * constant per row, drops out); ties break toward the lower cell
@@ -253,7 +243,7 @@ object Similarity {
     * are DROPPED (so stage 2 always has members), and each group's
     * member list ascends by global cell id (the in-group tie policy).
     * Everything is a deterministic fold in cell-index order — the
-    * oracle builder calls THIS function on the stashed centroids and
+    * oracle builder calls THIS function on the stored centroids and
     * interpolates identical literals. */
   def groupCells(cents: Array[Array[Double]],
                  iters: Int = 3): (Array[Array[Double]], Array[Array[Int]]) = {
@@ -562,29 +552,25 @@ object Similarity {
   def pqCodebooks(df: DataFrame, idCol: String, vecCol: String,
                   m: Int, ks: Int, dim: Int, iters: Int = 4,
                   trainMod: Int = 4,
-                  cacheKey: Option[String] = None): Array[Array[Array[Double]]] = {
+                  cacheKey: Option[String] = None): Array[Array[Array[Double]]] =
+    SessionStore.memo(df.sparkSession, cacheKey, pqBooksName(m, ks, iters, trainMod))(
+      trainPqBooks(df, idCol, vecCol, m, ks, dim, iters, trainMod))
+
+  /** The m subspace trainings behind one codebook set. They are
+    * INDEPENDENT Lloyd runs, submitted as concurrent Spark jobs
+    * instead of m sequential chains of iters-each tiny jobs; each
+    * run's own math is untouched, so every book trains to the same
+    * values as a sequential loop. A dedicated fixed pool of 3 (2-3
+    * jobs in flight is plenty) bounds in-flight trainings, owns its
+    * blocking and dies with the call. The set is one store entry
+    * (the caller's), never m: a subspace training must not read as a
+    * coarse-quantizer training in [[SessionStore.trained]]. A failed
+    * training propagates out of Await.result as soon as
+    * Future.sequence sees it. */
+  private def trainPqBooks(df: DataFrame, idCol: String, vecCol: String,
+                           m: Int, ks: Int, dim: Int, iters: Int,
+                           trainMod: Int): Array[Array[Array[Double]]] = {
     val sd = dim / m
-    // r21: the m subspace trainings are INDEPENDENT Lloyd runs (each
-    // its own memo key, its own sample slice) — submit them as
-    // concurrent Spark jobs instead of m sequential chains of
-    // iters-each tiny jobs. Each run's own math is untouched
-    // (identical plans per subspace), so every book trains to the
-    // same values as the sequential loop; only the wall-clock
-    // overlaps. Spark job submission is thread-safe; the memo is a
-    // TrieMap keyed per subspace.
-    // r22 (guide §2.6 — "2-3 jobs in flight is plenty"): a DEDICATED
-    // fixed pool of 3 instead of ExecutionContext.global. The global
-    // pool sized itself to cores and ran all m trainings at once
-    // (m Lloyd chains fighting for executors on a busy cluster), its
-    // workers blocked on Spark actions (collect/head per iteration),
-    // and setActiveSession planted an inheritable thread-local
-    // session on SHARED pool threads that outlived this call. The
-    // private pool bounds in-flight trainings, owns its blocking, and
-    // dies with the call; setActiveSession remains required because
-    // trackOwned/memoized capture through getActiveSession on the
-    // worker thread (trainCentroids itself releases via the precise
-    // checkpointRdds capture). A failed training propagates out of
-    // Await.result as soon as Future.sequence sees it.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -593,11 +579,9 @@ object Similarity {
     try {
       val trainings = (0 until m).map { sub =>
         Future {
-          org.apache.spark.sql.SparkSession.setActiveSession(df.sparkSession)
           val sliced = df.select(col(idCol),
             slice(col(vecCol), sub * sd + 1, sd).as(vecCol))
-          kmeansCentroids(sliced, idCol, vecCol, k = ks, iters = iters,
-            trainMod = trainMod, cacheKey = cacheKey.map(ck => s"$ck|pq$sub"))
+          trainCentroids(sliced, idCol, vecCol, ks, iters, trainMod)
         }
       }
       Await.result(Future.sequence(trainings), Duration.Inf).toArray
@@ -688,16 +672,18 @@ object Similarity {
   }
 
   /** PQ codebooks trained on coarse residuals — the same
-    * deterministic Lloyd trainer, fed x − q1(x). The memo key is
-    * suffixed so residual books never collide with raw-vector books
+    * deterministic Lloyd trainer, fed x − q1(x). Stored under its own
+    * name so residual books never collide with raw-vector books
     * trained in the same session. */
   def pqResidualCodebooks(df: DataFrame, idCol: String, vecCol: String,
                           cents: Array[Array[Double]],
                           m: Int, ks: Int, dim: Int, iters: Int = 4,
                           trainMod: Int = 4,
                           cacheKey: Option[String] = None): Array[Array[Array[Double]]] =
-    pqCodebooks(residualFrame(df, idCol, vecCol, cents), idCol, vecCol,
-      m, ks, dim, iters, trainMod, cacheKey.map(ck => s"$ck|res"))
+    SessionStore.memo(df.sparkSession, cacheKey,
+        pqResidualBooksName(m, ks, iters, trainMod))(
+      trainPqBooks(residualFrame(df, idCol, vecCol, cents), idCol, vecCol,
+        m, ks, dim, iters, trainMod))
 
   /** offsets(cell)(m)(j) = ‖b_mj‖² + 2⟨slice_m(c_cell), b_mj⟩ — the
     * cell-dependent constant that turns residual assignment into

@@ -364,7 +364,7 @@ case class CellScores(child: Expression,
   * the inverted-multi-index family). Both engines replay the same
   * rule: the grouping is a deterministic driver-side function of the
   * centroid table (Similarity.groupCells), so the oracle SQL rebuilds
-  * the identical (groupCents, members) literals from the stashed
+  * the identical (groupCents, members) literals from the stored
   * centroids. Same round₆/strict-< discipline as [[NearestCell]] in
   * both stages; members ascend by global id so in-group ties keep the
   * lowest-id policy. Group/member/centroid tables ride

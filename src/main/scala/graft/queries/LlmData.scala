@@ -25,16 +25,20 @@ object LlmData {
       |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin
 
   // ---------------------------------------------------- d_minhash_lsh
-  // The three minhash queries (lsh / estimate / clusters) share one
-  // session-store key per (session, sf dir): signatures and candidate
-  // pairs materialize once, every later query reuses them — the
+  // Every session-trained artifact (signatures, pairs, overlap stats,
+  // centroids, codebooks, fits, ground truth, index dirs) lives in the
+  // SessionStore under one scope per (session, sf dir): it
+  // materializes once and every later query reuses it — the
   // signature-store pattern a 100-TB dedup pipeline runs as tables.
-  private def mhKey(s: SparkSession, d: String): Option[String] =
-    Some(s"${org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(s)}|$d")
+  private def scope(s: SparkSession, d: String): String =
+    s"${org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(s)}|$d"
+
+  private def stored[T](s: SparkSession, d: String, name: String)(build: => T): T =
+    SessionStore.memo(s, scope(s, d), name)(build)
 
   private val minhashLsh: Q = (s, d) =>
     Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
       .orderBy("id1", "id2")
 
   private val minhashLshSql = {
@@ -73,7 +77,7 @@ object LlmData {
   private val sourceDupRate: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
     val dupIds = pairs.select(col("id1").as("doc_id"))
       .unionAll(pairs.select(col("id2").as("doc_id")))
       .distinct().withColumn("is_dup", lit(1L))
@@ -171,7 +175,7 @@ object LlmData {
   // ---------------------------------------------- d_minhash_estimate
   private val minhashEstimate: Q = (s, d) =>
     Dedup.minhashJaccardEstimate(Tables.documents(s, d), "doc_id", "text",
-        cacheKey = mhKey(s, d))
+        cacheKey = Some(scope(s, d)))
       .orderBy("id1", "id2")
 
   private val minhashEstimateSql = {
@@ -213,7 +217,7 @@ object LlmData {
   private val dupClusters: Q = (s, d) =>
     Dedup.clusterPairs(
         Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-          cacheKey = mhKey(s, d)), maxIter = 8)
+          cacheKey = Some(scope(s, d))), maxIter = 8)
       .orderBy("id")
 
   /** Shared recursive-closure CTE block: documents → shingles →
@@ -266,7 +270,7 @@ object LlmData {
   private val clusterPurity: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val clusters = Dedup.clusterPairs(Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d)))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d))))
     clusters
       .join(docs.select(col("doc_id").as("id"), col("source")), "id")
       .groupBy("cluster", "source").agg(count(lit(1)).as("c"))
@@ -304,7 +308,7 @@ object LlmData {
   // against the (tiny) non-keeper set, the corpus never shuffles.
   private val dedupApply: Q = (s, d) =>
     Dedup.dedupCorpus(Tables.documents(s, d), "doc_id", "text",
-        cacheKey = mhKey(s, d))
+        cacheKey = Some(scope(s, d)))
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
 
@@ -521,10 +525,10 @@ object LlmData {
   private val neardupVenn: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val nj = Dedup.ngramJaccard(docs, "doc_id", "text", k = 3,
-        maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(scope(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("in_jaccard"))
     val mh = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("in_minhash"))
     val sh = Dedup.simhashNearDup(docs, "doc_id", "text")
       .select(col("id1"), col("id2"), lit(1L).as("in_simhash"))
@@ -564,10 +568,10 @@ object LlmData {
   private val lshCalibration: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val exact = Dedup.ngramJaccard(docs, "doc_id", "text", k = 3,
-        maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(scope(s, d)))
       .select(col("id1"), col("id2"), col("jaccard"))
     val lsh = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("caught"))
     val mid = least(col("j_bucket").cast("double") / lit(10.0) + lit(0.05), lit(1.0))
     val s4 = mid * mid * mid * mid
@@ -607,7 +611,7 @@ object LlmData {
   // -------------------------------------------------- d_ngram_jaccard
   private val ngramJaccard: Q = (s, d) =>
     Dedup.ngramJaccard(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(scope(s, d)))
       .orderBy("id1", "id2")
 
   // --------------------------------------------- d_containment_dup
@@ -617,7 +621,7 @@ object LlmData {
   // dedup policy keeps the superset doc.
   private val containmentDup: Q = (s, d) =>
     Dedup.ngramContainment(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minContainment = 0.5, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minContainment = 0.5, cacheKey = Some(scope(s, d)))
       .orderBy("id1", "id2")
 
   private val containmentDupSql =
@@ -902,24 +906,24 @@ object LlmData {
     "d_substr_long" -> substrLongAltSql,
     "d_simhash" -> simhashAltSql,
     "d_simhash_neardup" -> simhashNeardupAltSql) ++
-    // the reindexed-search ALT interpolates the SAME stashed
+    // the reindexed-search ALT interpolates the SAME stored
     // re-trained centroids + residual books as the generic replay
     // (populated when the query ran — Verify dumps oracles after
     // queries), list-native so the ⌈√n⌉-cell assignment fits the
     // oracle budget at any campaign decade
-    ((reindexCents.values.toList, residBooksStash.values.toList) match {
+    ((reindexCents, resBooks) match {
       case (rc :: Nil, b :: Nil) =>
         Map("s_reindex_topk" -> ivfPqTopKAltSql(rc, b))
       case (rcs, bs) =>
         // r18 advice: a silently-suppressed ALT sends the N× sweep to
         // the generic oracle that is KNOWN to exceed budget at volume
         // — name the suppression so the resulting TIMEOUT/ERROR reads
-        // back to its cause. r19 advice: warn on ANY non-empty stash
-        // that misses the 1:1 pattern (an asymmetric stash — 1 fit /
+        // back to its cause. r19 advice: warn on ANY non-empty store
+        // list that misses the 1:1 pattern (an asymmetric one — 1 fit /
         // 0 cuts — suppressed silently before), printing both sizes.
         if (rcs.nonEmpty || bs.nonEmpty)
           System.err.println("[oracleAlt] s_reindex_topk ALT SUPPRESSED: " +
-            s"ambiguous stash (${rcs.size} reindex trainings, " +
+            s"ambiguous store (${rcs.size} reindex trainings, " +
             s"${bs.size} residual books in this JVM) — the sweep will " +
             "fall back to the generic replay")
         Map.empty[String, String]
@@ -929,8 +933,7 @@ object LlmData {
     // (see classifierValQSql's src note) — the generic replay's
     // exploded token join over ALL docs drove a DuckDB temp spill
     // past the disk at 100× under campaign load
-    ((classifierValQStash.values.toList,
-        classifierValQCutStash.values.toList) match {
+    ((fits("classifierValQFit"), cuts("classifierValQCut")) match {
       case (f :: Nil, c :: Nil) =>
         Map("t_classifier_val_q" -> classifierValQSql(f, c,
           "(SELECT * FROM documents WHERE TRY_CAST('0x' || " +
@@ -938,7 +941,7 @@ object LlmData {
       case (fs, cs) =>
         if (fs.nonEmpty || cs.nonEmpty)  // r19 advice: any asymmetry
           System.err.println("[oracleAlt] t_classifier_val_q ALT " +
-            s"SUPPRESSED: ambiguous stash (${fs.size} fits, ${cs.size} " +
+            s"SUPPRESSED: ambiguous store (${fs.size} fits, ${cs.size} " +
             "cuts in this JVM) — the sweep will fall back to the " +
             "generic all-docs replay")
         Map.empty[String, String]
@@ -1131,24 +1134,17 @@ object LlmData {
   // assignment argmin, probe score, cosine rerank — is rounded to 6
   // digits with an index tiebreak on BOTH sides, so differing
   // double-accumulation orders (Spark partial aggs vs DuckDB group
-  // aggs) cannot flip a near-tie. The centroid stash below is what
-  // `oracle` reads — populated when the query builds (Verify runs
-  // queries before dumping oracle_sql.json), keyed per (session,
-  // sfDir) like the other memos so one JVM serving several datasets
-  // never interpolates the wrong training run.
-  private val ivfCentroids =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  // released with the rest of the session stores — Dedup.clearStore()
-  // is the one lifecycle call
-  graft.operators.Dedup.onClearStore(() => ivfCentroids.clear())
+  // aggs) cannot flip a near-tie. `oracle` reads the centroids back
+  // from the store entry the query's kmeansCells trains (Verify runs
+  // queries before dumping oracle_sql.json); the entry is scoped per
+  // (session, sfDir), so one JVM serving several datasets never
+  // interpolates the wrong training run.
+  private val ivfCentsName = Similarity.centroidsName(k = 8, iters = 4, trainMod = 4)
 
   private val ivfTopK: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
     val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+      k = 8, iters = 4, trainMod = 4, cacheKey = Some(scope(s, d)))
     val quantized = emb.join(cells, "vec_id")
     Similarity.ivfTopK(quantized.filter(col("vec_id") < 10), quantized,
         "vec_id", "embedding", cellCol = "cell", k = 3, nprobe = 3)
@@ -1164,11 +1160,8 @@ object LlmData {
   // accuracy claim lives in the driver gate, not just a spec floor.
   private val ivfRecall: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
     val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+      k = 8, iters = 4, trainMod = 4, cacheKey = Some(scope(s, d)))
     val quantized = emb.join(cells, "vec_id")
     val q = emb.filter(col("vec_id") < 10)
     val exact = exactTop3(s, d).select(col("qid"), col("cid"))
@@ -1310,67 +1303,46 @@ object LlmData {
   // (same Lloyd trainer + rounding/tiebreak discipline as IVF), so
   // the trained codebooks interpolate into the oracle and DuckDB
   // replays assignment, LUT, shortlist and rerank exactly.
-  private val pqBooksStash =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  graft.operators.Dedup.onClearStore(() => pqBooksStash.clear())
+  private val pqBooksName = Similarity.pqBooksName(m = 4, ks = 8, iters = 4, trainMod = 4)
 
-  private def trainPq(s: SparkSession, d: String): Array[Array[Array[Double]]] = {
-    val books = Similarity.pqCodebooks(Tables.embeddings(s, d), "vec_id",
+  private def trainPq(s: SparkSession, d: String): Array[Array[Array[Double]]] =
+    Similarity.pqCodebooks(Tables.embeddings(s, d), "vec_id",
       "embedding", m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4,
-      cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => pqBooksStash.put(k, books))
-    books
-  }
+      cacheKey = Some(scope(s, d)))
 
   // The composed-index family trains a SECOND codebook set on coarse
-  // RESIDUALS (x − q1(x), Jégou'11 §IV) — stashed separately so the
-  // raw-PQ oracles (s_pq_*, d_pq_semdedup) and the residual-IVFADC
+  // RESIDUALS (x − q1(x), Jégou'11 §IV) — stored under its own name so
+  // the raw-PQ oracles (s_pq_*, d_pq_semdedup) and the residual-IVFADC
   // oracles each interpolate their own training.
-  private val residBooksStash =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  graft.operators.Dedup.onClearStore(() => residBooksStash.clear())
+  private val resBooksName =
+    Similarity.pqResidualBooksName(m = 4, ks = 8, iters = 4, trainMod = 4)
 
   /** Train (or fetch) the composed index's artifacts: the 8-cell
-    * Lloyd coarse quantizer plus residual PQ codebooks. Both ride the
-    * session memo stores; both stash for oracle interpolation. */
+    * Lloyd coarse quantizer plus residual PQ codebooks, both from the
+    * session store the oracle reads them back from. */
   private def trainIvfPqResidual(s: SparkSession,
                                  d: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val emb = Tables.embeddings(s, d)
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
+      k = 8, iters = 4, trainMod = 4, cacheKey = Some(scope(s, d)))
     val books = Similarity.pqResidualCodebooks(emb, "vec_id", "embedding",
       cents, m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4,
-      cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => residBooksStash.put(k, books))
+      cacheKey = Some(scope(s, d)))
     (cents, books)
   }
 
   // The exact |Q|=10 brute-force top-3 is the shared ground truth of
   // every recall gate (s_lsh/ivf/pq/ivfpq_recall) AND the tuning
-  // curve — memoized per (session, corpus) so the five consumers pay
+  // curve — stored per (session, corpus) so the five consumers pay
   // the full corpus scan once (the signature-store pattern; Bench
   // times the build as _store_exacttopk so each reports marginal
   // cost).
-  private val exactTopStash =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  graft.operators.Dedup.onClearStore(() => exactTopStash.clear())
-
-  private def exactTop3(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    def build = {
+  private def exactTop3(s: SparkSession, d: String): DataFrame =
+    stored(s, d, "exactTop3") {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", k = 3).localCheckpoint(eager = true)
     }
-    mhKey(s, d) match {
-      // trackOwned: the stash holds a checkpointed frame — claim its
-      // blocks so clearStore can release them (r18 ownership
-      // discipline; clearStore no longer sweeps unclaimed RDDs)
-      case Some(k) => exactTopStash.getOrElseUpdate(s"$k|exacttop3",
-        graft.operators.Dedup.trackOwned(build))
-      case None => build
-    }
-  }
 
   private val pqTopK: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
@@ -1567,7 +1539,7 @@ object LlmData {
     val dir = annIndexDir(s, d)
     val tuning = graft.operators.AnnIndex.measureTuning(
       emb.filter(col("vec_id") < 10), emb, "embedding", dir,
-      annTable(mhKey(s, d).get),
+      annTable(scope(s, d)),
       exactTop = Some(exactTop3(s, d).select(col("qid"), col("cid"))))
     val occ = emb.agg((count(lit(1)).cast("double")
       / lit(IvfPqDefaults.nCells.toDouble)).as("occupancy"))
@@ -1595,37 +1567,32 @@ object LlmData {
   // IDENTICAL to the in-session path — the oracle is the SAME IVFADC
   // replay s_ivfpq_topk uses, so the gate proves persist → load →
   // search loses nothing.
-  private val annIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  graft.operators.Dedup.onClearStore(() => annIndexDirs.clear())
 
   private def annTable(key: String): String =
     s"graft_ann_${java.lang.Integer.toHexString(key.hashCode)}"
 
-  /** Build-once-per-(session, corpus): train (via the shared memo
-    * stores — no extra Lloyd runs), write the bucketed index to a
+  /** Build-once-per-(session, corpus): train (via the session store —
+    * no extra Lloyd runs), write the bucketed index to a store-owned
     * temp dir, return it. Bench times the write under the `_store_*`
     * discipline so the search query reports MARGINAL cost. */
-  private def annIndexDir(s: SparkSession, d: String): String = {
-    val key = mhKey(s, d).get
-    annIndexDirs.getOrElseUpdate(key, {
+  private def annIndexDir(s: SparkSession, d: String): String =
+    stored(s, d, "annIndex") {
       val emb = Tables.embeddings(s, d)
       val (cents, books) = trainIvfPqResidual(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann").toString
+      val dir = SessionStore.tempDir("graft_ann")
       // `label` rides the codes table as a carried metadata column —
       // the filtered-search path (s_filtered_topk) pushes predicates
       // on it into the same bucketed scan the plain search prunes
       graft.operators.AnnIndex.write(emb, "vec_id", "embedding", dir,
-        annTable(key), cents, books, numBuckets = 8,
+        annTable(scope(s, d)), cents, books, numBuckets = 8,
         metaCols = Seq("label"))
       dir
-    })
-  }
+    }
 
   private val ivfPqIndexed: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(scope(s, d)))
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1641,41 +1608,32 @@ object LlmData {
   // autoCells(n) — ⌈√n⌉ cells, the executable form of the tuning-
   // curve row's "re-training is the answer" — and search the
   // re-trained index at the standard operating point. The re-trained
-  // centroids are stashed so the oracle replays the SAME generic
-  // IVFADC SQL with the new literals: the gate proves the
+  // centroids are stored with the dir so the oracle replays the SAME
+  // generic IVFADC SQL with the new literals: the gate proves the
   // maintenance op loses nothing — reindex → load → search is
   // hash-identical to an engine-independent replay of the re-trained
   // index. (PQ codebooks survive reindex byte-identical —
   // AnnIndexSpec pins that — so the oracle's ADC side reuses the one
-  // stashed training.)
-  private val annReindexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  graft.operators.Dedup.onClearStore(() => annReindexDirs.clear())
+  // residual training.)
+  private final case class Reindexed(dir: String, cents: Array[Array[Double]])
 
-  private val reindexCents =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  graft.operators.Dedup.onClearStore(() => reindexCents.clear())
-
-  private def annReindexDir(s: SparkSession, d: String): String = {
-    val key = mhKey(s, d).get
-    annReindexDirs.getOrElseUpdate(key, {
+  private def annReindexDir(s: SparkSession, d: String): String =
+    stored(s, d, "annReindex") {
       val emb = Tables.embeddings(s, d)
       val (cents8, books) = trainIvfPqResidual(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_annre").toString
-      val tbl = annTable(key) + "_re"
+      val dir = SessionStore.tempDir("graft_annre")
+      val tbl = annTable(scope(s, d)) + "_re"
       graft.operators.AnnIndex.write(emb, "vec_id", "embedding", dir,
         tbl, cents8, books, numBuckets = 8)
       val meta = graft.operators.AnnIndex.reindex(emb, "embedding", dir,
         tbl, iters = 4, trainMod = 4)
-      reindexCents.put(key, meta.cents)
-      dir
-    })
-  }
+      Reindexed(dir, meta.cents)
+    }.dir
 
   private val reindexTopK: Q = (s, d) => {
     val dir = annReindexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get) + "_re")
+      annTable(scope(s, d)) + "_re")
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1700,7 +1658,7 @@ object LlmData {
   private val filteredTopK: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(scope(s, d)))
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1732,29 +1690,18 @@ object LlmData {
   // would decay toward zero as the filter sharpens. Ground truth is
   // its own small store (_store_exactfilt — the _store_exacttopk
   // discipline) so the gate row reports marginal cost.
-  private val exactFilteredStash =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  graft.operators.Dedup.onClearStore(() => exactFilteredStash.clear())
-
-  private def exactFilteredTop3(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    def build = {
+  private def exactFilteredTop3(s: SparkSession, d: String): DataFrame =
+    stored(s, d, "exactFilteredTop3") {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10),
           emb.filter(col("label") === 1), "vec_id", "embedding", k = 3)
         .localCheckpoint(eager = true)
     }
-    mhKey(s, d) match {
-      // trackOwned: stash-held checkpoint — see exactTopStash
-      case Some(k) => exactFilteredStash.getOrElseUpdate(s"$k|exactfilt3",
-        graft.operators.Dedup.trackOwned(build))
-      case None => build
-    }
-  }
 
   private val filteredRecall: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(scope(s, d)))
     val emb = Tables.embeddings(s, d)
     val exact = exactFilteredTop3(s, d).select(col("qid"), col("cid"))
     val approx = graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
@@ -1999,7 +1946,7 @@ object LlmData {
       // the reindex oracle): cellassign replays the hierarchical rule
       // the engine's TwoLevelCell kernel computes — group argmin over
       // the ⌈√k⌉ grouping literals (Similarity.groupCells on the SAME
-      // stashed centroids, so both engines see identical doubles),
+      // stored centroids, so both engines see identical doubles),
       // then the cell argmin restricted to the winning group's
       // members. celld (all cells) survives for the QUERY side only
       // (proberanks/qcdots rank every cell — |Q|-bounded), which also
@@ -2647,12 +2594,8 @@ object LlmData {
   // (session, corpus); the dyadic 2⁻²⁰ snap keeps the scored margin
   // bit-exact cross-engine, so the trained weights interpolate into
   // the oracle exactly like the LCG literals they replaced.
-  private val classifierFitStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierFitStash.clear())
-
-  private def trainClassifier(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifier(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, "classifierFit") {
       val docs = Tables.documents(s, d).withColumn("_lbl",
         graft.operators.Classifier.langAgreeLabel(col("text"), col("lang")))
       // trainMod: auto — full batch at every committed proof scale
@@ -2663,11 +2606,6 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(docs.count()),
         bigrams = true)
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierFitStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifier: Q = (s, d) => {
     val fit = trainClassifier(s, d)
@@ -2828,12 +2766,8 @@ object LlmData {
   private def valBucket = // content-hash 5-bucket; bucket 0 = val
     graft.operators.Dedup.shingleHash(concat(lit("cvsplit:"), col("text"))) % 5
 
-  private val classifierValStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierValStash.clear())
-
-  private def trainClassifierVal(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifierVal(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, "classifierValFit") {
       val docs = Tables.documents(s, d).withColumn("_lbl",
         graft.operators.Classifier.langAgreeLabel(col("text"), col("lang")))
       // trainMod: auto on the TRAIN-side count (r19, r18 advice —
@@ -2847,22 +2781,13 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
         bigrams = true)
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   // the calibrated operating cut (Classifier.calibrateCut — the
   // executable threshold rule), chosen on the TRAIN side only (picking
   // it on val would leak) and interpolated into the oracle as an
   // integer-bucket literal like the trained weights
-  private val classifierValCutStash =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  graft.operators.Dedup.onClearStore(() => classifierValCutStash.clear())
-
-  private def trainClassifierValCut(s: SparkSession, d: String): Long = {
-    def build = {
+  private def trainClassifierValCut(s: SparkSession, d: String): Long =
+    stored(s, d, "classifierValCut") {
       val fit = trainClassifierVal(s, d)
       val logit = T.classifierMargin(col("text"), fit.weightSeq, fit.bias)
       val label = graft.operators.Classifier.langAgreeLabel(col("text"), col("lang"))
@@ -2870,11 +2795,6 @@ object LlmData {
         Tables.documents(s, d).filter(valBucket =!= 0)
           .select(logit.as("m"), label.as("y")), "m", "y")
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValCutStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifierVal: Q = (s, d) => {
     val fit = trainClassifierVal(s, d)
@@ -3069,12 +2989,8 @@ object LlmData {
     when(comp, 1L).otherwise(0L)
   }
 
-  private val classifierValQStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierValQStash.clear())
-
-  private def trainClassifierValQ(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifierValQ(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, "classifierValQFit") {
       val docs = Tables.documents(s, d).withColumn("_lbl", qcLabel)
       // train-side autoTrainMod — same r19 fix as trainClassifierVal
       val trainDocs = docs.filter(valBucket =!= 0)
@@ -3083,33 +2999,19 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
         bigrams = false, featsCol = Some(qcToks))
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValQStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   // the calibrated operating cut for the quality-composite gate
   // (r19 — the t_classifier_val discipline carried to the seed whose
   // floor the task actually supports): chosen on TRAIN only,
   // interpolated into the oracle as an integer-bucket literal
-  private val classifierValQCutStash =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  graft.operators.Dedup.onClearStore(() => classifierValQCutStash.clear())
-
-  private def trainClassifierValQCut(s: SparkSession, d: String): Long = {
-    def build = {
+  private def trainClassifierValQCut(s: SparkSession, d: String): Long =
+    stored(s, d, "classifierValQCut") {
       val fit = trainClassifierValQ(s, d)
       val logit = T.classifierLogit(qcToks, fit.weightSeq, fit.bias)
       graft.operators.Classifier.calibrateCut(
         Tables.documents(s, d).filter(valBucket =!= 0)
           .select(logit.as("m"), qcLabel.as("y")), "m", "y")
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValQCutStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifierValQ: Q = (s, d) => {
     val fit = trainClassifierValQ(s, d)
@@ -4898,7 +4800,7 @@ object LlmData {
     val sp = when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
     val splits = docs.select(col("doc_id"), sp.as("split"))
     val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
     val sym = pairs.select(col("id1").as("eval_id"), col("id2").as("other_id"))
       .unionAll(pairs.select(col("id2").as("eval_id"), col("id1").as("other_id")))
     sym
@@ -5327,22 +5229,22 @@ object LlmData {
     * family queries report MARGINAL cost — without this the one-time
     * build lands on whichever family query runs first alphabetically
     * and round-over-round comparisons mis-attribute it. Construction
-    * alone materializes each store (the memos checkpoint eagerly);
-    * every later query with the same key hits the memo. */
+    * alone materializes each store entry (frames checkpoint eagerly);
+    * every later query with the same scope hits the entry. */
   def storeBuilders: Map[String, (SparkSession, String) => Unit] = Map(
     "_store_minhash" -> ((s, d) => {
       Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(scope(s, d)))
       ()
     }),
     "_store_overlap" -> ((s, d) => {
       Dedup.ngramJaccard(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(scope(s, d)))
       ()
     }),
     "_store_kmeans" -> ((s, d) => {
       Similarity.kmeansCells(Tables.embeddings(s, d), "vec_id", "embedding",
-        k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+        k = 8, iters = 4, trainMod = 4, cacheKey = Some(scope(s, d)))
       ()
     }),
     "_store_pq" -> ((s, d) => { trainPq(s, d); () }),
@@ -5355,20 +5257,29 @@ object LlmData {
     "_store_annindex" -> ((s, d) => { annIndexDir(s, d); () }),
     "_store_annreindex" -> ((s, d) => { annReindexDir(s, d); () }))
 
+  // The live trainings `oracle` and `oracleAlt` interpolate, one list
+  // per artifact across every (session, sfDir) scope in this JVM.
+  private def ivfCents = SessionStore.trained[Array[Array[Double]]](ivfCentsName)
+  private def pqBooks = SessionStore.trained[Array[Array[Array[Double]]]](pqBooksName)
+  private def resBooks = SessionStore.trained[Array[Array[Array[Double]]]](resBooksName)
+  private def reindexCents = SessionStore.trained[Reindexed]("annReindex").map(_.cents)
+  private def fits(name: String) = SessionStore.trained[Classifier.Fit](name)
+  private def cuts(name: String) = SessionStore.trained[Long](name)
+
   /** Static oracles plus the centroid-interpolated IVF replay (present
     * once the s_ivf_topk query has trained — Verify runs every query
     * before dumping oracle_sql.json, so the gate always sees it).
-    * Interpolation requires an UNAMBIGUOUS stash: exactly one
+    * Interpolation requires an UNAMBIGUOUS training: exactly one
     * (session, sfDir) trained in this JVM (the Verify case). With
-    * several trainings stashed, emitting either set would hash-
+    * several trainings live, emitting either set would hash-
     * mismatch the other dataset's parquet — degrade to the weaker
     * rows-only check instead of emitting a wrong oracle. */
   def oracle: Map[String, String] =
-    staticOracle ++ (ivfCentroids.values.toList match {
+    staticOracle ++ (ivfCents match {
       case c :: Nil =>
         Map("s_ivf_topk" -> ivfTopKSql(c), "s_ivf_recall" -> ivfRecallSql(c))
       case _ => Map.empty[String, String]
-    }) ++ (pqBooksStash.values.toList match {
+    }) ++ (pqBooks match {
       case b :: Nil =>
         Map("s_pq_topk" -> pqTopKSql(b), "s_pq_recall" -> pqRecallSql(b),
           "d_pq_semdedup" -> pqSemDedupSql(b),
@@ -5376,8 +5287,9 @@ object LlmData {
           // emission log — same replay, so same oracle
           "d_stream_pqdedup" -> pqSemDedupSql(b))
       case _ => Map.empty[String, String]
-    }) ++ ((ivfCentroids.values.toList, residBooksStash.values.toList) match {
-      // the composed-index replay needs BOTH trainings stashed
+    }) ++ ((ivfCents,
+        resBooks) match {
+      // the composed-index replay needs BOTH trainings live
       // unambiguously (one (session, sfDir) in this JVM) — the
       // RESIDUAL codebooks, not the raw-PQ family's
       case (c :: Nil, b :: Nil) =>
@@ -5400,34 +5312,32 @@ object LlmData {
           // production coding mode this time)
           "d_stream_pqdedup_res" -> pqResSemDedupSql(c, b))
       case _ => Map.empty[String, String]
-    }) ++ ((reindexCents.values.toList, residBooksStash.values.toList) match {
+    }) ++ ((reindexCents, resBooks) match {
       // the reindexed search replays the SAME generic IVFADC SQL,
       // interpolating the RE-TRAINED centroids (autoCells(n) of
       // them — the CTE builder is generic over ncells, and the
-      // residual offsets re-derive from them) with the one stashed
+      // residual offsets re-derive from them) with the one live
       // residual codebook training (books survive reindex; CODES
       // re-quantize, which the replay reproduces)
       case (rc :: Nil, b :: Nil) =>
         Map("s_reindex_topk" -> ivfPqTopKSql(rc, b))
       case _ => Map.empty[String, String]
-    }) ++ (classifierFitStash.values.toList match {
+    }) ++ (fits("classifierFit") match {
       // the trained-classifier replay interpolates the in-JVM fit's
-      // dyadic weights — same unambiguity guard as the IVF/PQ stashes
+      // dyadic weights — same unambiguity guard as the IVF/PQ books
       case f :: Nil =>
         Map("t_classifier_score" -> classifierSql(f),
           "t_classifier_calib" -> classifierCalibSql(f))
       case _ => Map.empty[String, String]
-    }) ++ ((classifierValStash.values.toList,
-        classifierValCutStash.values.toList) match {
+    }) ++ ((fits("classifierValFit"), cuts("classifierValCut")) match {
       // the held-out-validation replay interpolates the TRAIN-split
       // fit (a different training set than trainClassifier's, so a
-      // separate stash with the same unambiguity guard) plus the
+      // separate entry with the same unambiguity guard) plus the
       // train-calibrated integer cut
       case (f :: Nil, c :: Nil) =>
         Map("t_classifier_val" -> classifierValSql(f, c))
       case _ => Map.empty[String, String]
-    }) ++ ((classifierValQStash.values.toList,
-        classifierValQCutStash.values.toList) match {
+    }) ++ ((fits("classifierValQFit"), cuts("classifierValQCut")) match {
       // the quality-composite-seed validation replay interpolates its
       // own train-split fit (word+stat-token stream) plus the
       // train-calibrated integer cut (r19)

@@ -1077,7 +1077,9 @@ object Pipeline {
     val batch = Tables.events(s, d)
       .select("user_id", "event_type", "ts_ms", "value")
     val sentinelMs = batch.agg(max(col("ts_ms"))).head().getLong(0) + gapMs + 1
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    // the result reads the sink lazily, so the session store owns the
+    // dir (staged copy, sink, checkpoint) and deletes it on clearStore
+    val streamDir = graft.operators.SessionStore.tempDir("graft_stream")
     def stage(df: DataFrame, prefix: String): Unit = {
       val staging = s"$streamDir/_staging_$prefix"
       df.write.parquet(staging)

@@ -93,8 +93,9 @@ object ShardExport {
     // capture the checkpoint's backing RDD for release — Dataset
     // .unpersist is a no-op on a localCheckpoint'd frame (blocks live
     // on an internal RDD the CacheManager never saw)
-    val (assigned, ckptRdds) = graft.operators.Dedup.withNewPersistentRdds(
-      assign(docs, textCol, idCol, shardSize, nShards).localCheckpoint())
+    val assigned = assign(docs, textCol, idCol, shardSize, nShards).localCheckpoint()
+    val ckptRdds =
+      org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(assigned)
     try {
       // one bounded file per shard, rows already in training order
       assigned.select(col("shard"), col("pos_in_shard"),

@@ -22,11 +22,11 @@ object ColumnBridge {
   }
 
   /** The persisted RDDs backing a `localCheckpoint`'d Dataset — the
-    * PRECISE handle for releasing its blocks. The global
-    * before/after diff of `getPersistentRDDs` (Dedup
-    * .withNewPersistentRdds) is wrong under concurrent trainings
-    * (r21: pqCodebooks runs subspace Lloyd trainings in parallel —
-    * one thread's diff would capture, and later unpersist, another
+    * PRECISE handle for releasing its blocks. A global before/after
+    * diff of `getPersistentRDDs` (kept only inside SessionStore.memo's
+    * claim) is wrong for scoped releases under concurrent trainings
+    * (pqCodebooks runs subspace Lloyd trainings in parallel — one
+    * thread's diff would capture, and later unpersist, another
     * thread's LIVE sample, whose lineage the checkpoint truncated);
     * reading the RDD off the checkpoint's own LogicalRDD plan node
     * captures exactly the blocks this frame owns. */
